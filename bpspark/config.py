@@ -42,13 +42,13 @@ def fast_scratch_dir() -> str | None:
 def enable_fast_scratch() -> str | None:
     """Point ``tempfile`` default scratch at :func:`fast_scratch_dir`.
 
-    Idempotent and cheap; called from session.build() and from
-    ensure_worker_imports() (the ``queries()`` wrapper path), so both the
-    bench harness and a vanilla-session driver sweep place checkpoint
-    dirs, staged drop folders, and sink outputs on the fast scratch.
-    METADATA/SCRATCH placement only — no query result or input ever
-    depends on where the temp root lives (state dirs stay stat-fingerprint
-    versioned through io.state_dir exactly as before)."""
+    Idempotent and cheap; called only from session.build(), so a harness
+    built through it places checkpoint dirs, staged drop folders, and sink
+    outputs on the fast scratch, while using the library on any other
+    session leaves the process temp dir alone. METADATA/SCRATCH placement
+    only — no query result or input ever depends on where the temp root
+    lives (state dirs stay stat-fingerprint versioned through
+    io.state_dir)."""
     import tempfile
 
     root = fast_scratch_dir()

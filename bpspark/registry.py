@@ -78,27 +78,27 @@ _PRIORITY: tuple[str, ...] = (
     "sim_ivf_index_compact", "stream_ivf_index_append",
     "sim_ivf_index_retrain", "pipeline_multimodal_corpus",
     "pipeline_audio_corpus",
-    #  * slot 33: sample_deterministic — the oldest driver row in the
-    #    repo (r8, rows-only), queued since the r12 recomposition;
-    "sample_deterministic",
-    #  * slots 34-40: rotation debt, streaming-harness ops first (their
-    #    re-cert doubles as direct driver evidence for this round's
-    #    tmpfs-scratch plumbing change — 6 oracle-backed + stream_scd_join
-    #    rows-only; all r11 rows):
+    #  * slots 33-40: the rows-only ingest-family ops staled by the
+    #    per-ZIP verdict rewrite of pipeline.ingest_from_arrivals (one
+    #    parse row per ZIP); their outputs were checked row-identical
+    #    against the prior rev, so these rows are re-certs. The same
+    #    change dropped the scratch hook from ensure_worker_imports,
+    #    which returned scan_python_datasource (slot 20) to its certified
+    #    hash; it stays as a re-cert filler:
+    "stream_ingest_pipeline", "ingest_properties_zip", "sink_control_table",
+    "pipeline_ingest_batch", "pipeline_quarantine", "pipeline_chapters",
+    "pipeline_idempotent_rerun", "stream_static_join",
+    #  * slots 41-46: rotation debt, streaming-harness ops first (all
+    #    oracle-backed; r11 rows):
     "stream_er_resolve", "stream_heavy_hitters", "stream_mv_refresh",
     "stream_state_introspection", "stream_stateful_counter",
-    "stream_scd_join", "udf_sql_registered",
-    #  * slots 41-50: rotation debt, the r1 aggregate core (r11 rows,
-    #    all oracle-backed). Window oracle count: 40/50. The rotation
-    #    debt that did NOT fit (19 ops, all r11 rows: agg_approx_distinct,
-    #    the dedup A/V fingerprints, distinct_rows, kcenter, the er pair,
-    #    the filter trio, fn_struct_field_surgery, maintenance_delete,
-    #    meta_query_profile, multimodal columns/audio_decode, the three
-    #    sinks, win_ntile_bucketize) queues for r14 — with r11 rows they
-    #    stay within the 3-round freshness budget through r14.
+    "udf_sql_registered",
+    #  * slots 47-50: rotation debt, the r1 aggregate core (r11 rows,
+    #    all oracle-backed). Window oracle count: 34/50. The rotation
+    #    debt that did NOT fit (sample_deterministic, stream_scd_join,
+    #    the rest of the aggregate core and the r11 queue listed in the
+    #    former tiers below) stays queued behind this window.
     "agg_count_distinct", "agg_cube", "agg_global", "agg_grouping_sets",
-    "agg_having", "agg_min_by_max_by", "agg_percentile_exact", "agg_pivot",
-    "agg_stddev_stable", "agg_string_concat_ordered",
     # --- (former tier A) the ROUND-12 driver window in r12 order; names
     # already listed above keep their tier-A slot (first occurrence wins
     # in _ordered — later duplicates are inert). Historical r12 notes:

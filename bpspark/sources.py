@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    MapType, StringType, StructField, StructType,
+    ArrayType, MapType, StringType, StructField, StructType,
 )
 
 from bpspark import errors
@@ -29,12 +29,16 @@ from bpspark.fixtures import default_dir
 from bpspark.parse import extract_isbn_from_path, parse_metadata_zip
 from bpspark.registry import op
 
+# One row per ZIP: its entries sorted by name, or NULL entries and an
+# EXTRACT_ZIP error when the archive cannot be read.
 PARSED_SCHEMA = StructType(
     [
         StructField("path", StringType(), False),
         StructField("isbn", StringType(), True),
-        StructField("entry", StringType(), True),
-        StructField("props", MapType(StringType(), StringType()), True),
+        StructField("entries", ArrayType(StructType([
+            StructField("entry", StringType(), True),
+            StructField("props", MapType(StringType(), StringType()), True),
+        ])), True),
         StructField("error_code", StringType(), True),
         StructField("error_msg", StringType(), True),
     ]
@@ -85,30 +89,38 @@ def scan_drop_folder(spark: SparkSession, drop_dir: str) -> DataFrame:
 
 
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: ZIP bytes → one row per entry, or one error row
-    (R15 per-file error channel, MetadataIngestionExecuter.java:62-73)."""
+    """mapInPandas body: ZIP bytes → one PARSED_SCHEMA row per ZIP (R15
+    per-file error channel, MetadataIngestionExecuter.java:62-73).
+
+    Entries are keyed by basename as in the reference's
+    ``HashMap<String, Properties>`` (MetadataIngestionServiceImpl.java:
+    131-134): of two entries with the same basename, the later one in ZIP
+    order wins."""
     for pdf in batches:
         rows: list[dict] = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            isbn = extract_isbn_from_path(path)
+            row = {"path": path, "isbn": extract_isbn_from_path(path), "entries": None,
+                   "error_code": None, "error_msg": None}
             try:
-                for entry, props in parse_metadata_zip(bytes(content)):
-                    rows.append(
-                        {"path": path, "isbn": isbn, "entry": entry, "props": props,
-                         "error_code": None, "error_msg": None}
-                    )
+                by_name = dict(parse_metadata_zip(bytes(content)))
+                row["entries"] = [{"entry": e, "props": p} for e, p in sorted(by_name.items())]
             except Exception as exc:  # noqa: BLE001 — quarantine, never abort the batch
-                rows.append(
-                    {"path": path, "isbn": isbn, "entry": None, "props": None,
-                     "error_code": errors.EXTRACT_ZIP, "error_msg": str(exc)[:500]}
-                )
+                row["error_code"] = errors.EXTRACT_ZIP
+                row["error_msg"] = str(exc)[:500]
+            rows.append(row)
         yield pd.DataFrame(rows, columns=[f.name for f in PARSED_SCHEMA.fields])
 
 
-def parse_zip_entries(arrivals: DataFrame) -> DataFrame:
-    """R3+R4+R5 fused: explode each ZIP into (isbn, entry, props) rows.
-    Input needs (path, content) columns; output is PARSED_SCHEMA."""
+def parse_zips(arrivals: DataFrame) -> DataFrame:
+    """R3+R4+R5 fused: one PARSED_SCHEMA row per ZIP. Input needs (path,
+    content) columns."""
     return arrivals.select("path", "content").mapInPandas(_parse_batches, PARSED_SCHEMA)
+
+
+def parse_zip_entries(arrivals: DataFrame) -> DataFrame:
+    """Per-entry view of :func:`parse_zips`: one (path, isbn, entry, props)
+    row per entry of every readable ZIP; unreadable ZIPs yield no rows."""
+    return parse_zips(arrivals).select("path", "isbn", F.inline("entries"))
 
 
 # ---------------------------------------------------------------------------
@@ -130,8 +142,7 @@ def ingest_properties_zip_typed(spark: SparkSession, sf: str) -> DataFrame:
     parity cases from FIXTURES.md §B1). Typed variant: props stays
     map<string,string> for downstream projection ops."""
     drop = f"{default_dir()}/drop"
-    parsed = parse_zip_entries(scan_drop_folder(spark, drop))
-    return parsed.filter(F.col("error_code").isNull()).select("isbn", "entry", "props")
+    return parse_zip_entries(scan_drop_folder(spark, drop)).select("isbn", "entry", "props")
 
 
 @op("ingest_properties_zip", sql=None)

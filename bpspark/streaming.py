@@ -357,7 +357,7 @@ def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     )
     parsed = parse_zip_entries(arrivals)
     books = (
-        parsed.filter(F.col("error_code").isNull() & (F.col("entry") == F.col("isbn")))
+        parsed.filter(F.col("entry") == F.col("isbn"))
         .withColumn("book_genre", F.element_at("props", F.lit("Genre")))
         .join(F.broadcast(genres), "book_genre", "left_semi")
         .select("isbn", "book_genre")

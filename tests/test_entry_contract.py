@@ -3,19 +3,25 @@ its own path bootstrap, and UDF-bearing ops work because the queries()
 wrapper ships bpspark to executor Python workers (addPyFile). Repo-cwd
 tests can't catch a regression there (workers then import bpspark from
 the cwd by accident), so this test runs the sim in a subprocess from a
-temp directory."""
+temp directory. The same vanilla-session run checks that the ops leave
+the process-global temp dir alone."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import tempfile
+
+import pytest
 
 REPO = "/root/repo"
 
 SCRIPT = f"""
 import sys
+import tempfile
 sys.path.insert(0, {REPO!r})
+tmp_before = tempfile.gettempdir()
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4").getOrCreate())
@@ -26,15 +32,30 @@ q = e.queries()
 assert q["udf_scalar_pandas"](spark, "/root/testdata/sf0.001").count() > 0
 assert q["scan_parquet"](spark, "/root/testdata/sf0.001").count() > 0
 print("ENTRY_CONTRACT_OK")
+print("TEMPDIR_UNCHANGED" if tempfile.tempdir == tmp_before else f"TEMPDIR_MOVED {{tempfile.tempdir}}")
 """
 
 
-def test_entry_runs_from_foreign_cwd():
-    res = subprocess.run(
+@pytest.fixture(scope="module")
+def entry_run():
+    # the engine's scratch default applies (no override in the child env)
+    env = {k: v for k, v in os.environ.items() if k != "BPSPARK_SCRATCH_DIR"}
+    return subprocess.run(
         [sys.executable, "-c", SCRIPT],
         cwd=tempfile.mkdtemp(prefix="bpspark_cwd_"),
         capture_output=True,
         text=True,
         timeout=300,
+        env=env,
     )
-    assert "ENTRY_CONTRACT_OK" in res.stdout, res.stderr[-2000:]
+
+
+def test_entry_runs_from_foreign_cwd(entry_run):
+    assert "ENTRY_CONTRACT_OK" in entry_run.stdout, entry_run.stderr[-2000:]
+
+
+def test_queries_leave_process_tempdir_unchanged(entry_run):
+    """Importing __spark_entry__ and running queries() ops on a vanilla
+    SparkSession must not repoint ``tempfile.tempdir``: only
+    session.build() opts a process into the engine's fast scratch."""
+    assert "TEMPDIR_UNCHANGED" in entry_run.stdout, entry_run.stdout[-2000:]

@@ -4,6 +4,11 @@ typed projection, and the idempotent-rerun invariant."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+import re
+import zipfile
+
 import pytest
 
 from bpspark import errors, fixtures
@@ -55,6 +60,22 @@ def test_accepted_books(result):
     assert props["Authors"].endswith("(et al.)")
     assert props["Publisher"] == "BestPub éditions"
     assert props["Imprint"] == "Caf\xe9 Press"
+
+
+@pytest.mark.parametrize("frame", ["workflows_new", "quarantine", "silver_chapters"])
+def test_sink_plan_parses_each_zip_once(spark, fixture_dir, frame):
+    """Every sink frame is a projection of the one per-ZIP verdict frame:
+    its plan holds exactly one parse (MapInPandas) and at most two drop-
+    folder scans (the gated arrivals and the single-flight winners). A
+    fresh, never-executed batch, so the plan is printed once (an executed
+    adaptive plan prints its initial and final forms)."""
+    res = ingest_batch(spark, f"{fixture_dir}/drop", Ledgers.load(spark, fixture_dir))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        getattr(res, frame).explain("formatted")
+    plan = buf.getvalue()
+    assert len(re.findall(r"[+:]- MapInPandas \(", plan)) == 1, plan
+    assert len(re.findall(r"[+:]- Scan binaryFile\s+\(", plan)) <= 2, plan
 
 
 def test_quarantine_paths(result):
@@ -176,12 +197,9 @@ def test_key_rule_single_definition(spark):
 def test_empty_zip_quarantined(spark, fixture_dir, tmp_path):
     """R15 (r8 fix): a ZIP that parses to ZERO entries must land in the
     quarantine (MISSING_BOOK_METADATA), not silently vanish."""
-    import io as _io
-    import zipfile
-
     drop = tmp_path / "drop_empty"
     drop.mkdir()
-    buf = _io.BytesIO()
+    buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w"):
         pass  # zero entries
     (drop / "9799999999999.zip").write_bytes(buf.getvalue())
@@ -192,6 +210,28 @@ def test_empty_zip_quarantined(spark, fixture_dir, tmp_path):
     q = res.quarantine.collect()
     assert len(q) == 1
     assert q[0]["error_code"] == errors.MISSING_BOOK_METADATA
+
+
+def test_duplicate_basename_last_entry_wins(spark, fixture_dir, tmp_path):
+    """R5: entries are keyed by basename, like the reference's
+    HashMap<String, Properties> (MetadataIngestionServiceImpl.java:131-134),
+    so of two entries with one basename the later in ZIP order wins and
+    the ISBN gets exactly one control row."""
+    isbn = "9781111111111"
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for title in ("A", "B"):
+            zf.writestr(f"{title.lower()}/{isbn}.txt",
+                        f"Title={title}\nGenre={fixtures.GENRES[0]}\nNrOfChapters=0\n")
+    drop = tmp_path / "drop_dup_basename"
+    drop.mkdir()
+    (drop / f"{isbn}.zip").write_bytes(buf.getvalue())
+
+    res = ingest_batch(spark, str(drop), Ledgers.load(spark, fixture_dir))
+    rows = res.workflows_new.collect()
+    assert [(r.isbn, r.book_title) for r in rows] == [(isbn, "B")]
+    assert [m.entry for m in rows[0].all_metadata] == [isbn]
+    assert res.quarantine.count() == 0
 
 
 def test_within_batch_duplicate_isbn_single_flight(spark, fixture_dir, tmp_path):
