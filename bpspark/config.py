@@ -5,6 +5,7 @@ tunables in ``alfresco-global.properties:7-19`` and the Spring wiring
 from __future__ import annotations
 
 import os
+import stat
 from dataclasses import dataclass
 
 
@@ -21,20 +22,28 @@ def fast_scratch_dir() -> str | None:
     point checkpointLocation/sinks at durable storage instead (every
     streaming op's docstring says so) — so it belongs on tmpfs where one
     exists. Resolution: $BPSPARK_SCRATCH_DIR ("" disables; any path wins),
-    else /dev/shm/bpspark_scratch when /dev/shm is a writable tmpfs, else
-    None (callers keep the system default). Parameterized, not detected
-    per-op: a production cluster sets the env (or leaves scratch on its
-    fast local disks) — nothing here is local-mode-specific."""
+    else the per-user /dev/shm/bpspark_scratch_{uid} (mode 0700) when
+    /dev/shm is a writable tmpfs, else None (callers keep the system
+    default). /dev/shm is shared by every local user, so a default root
+    that another user created first is refused (None), never used.
+    Parameterized, not detected per-op: a production cluster sets the env
+    (or leaves scratch on its fast local disks) — nothing here is
+    local-mode-specific."""
     root = os.environ.get("BPSPARK_SCRATCH_DIR")
     if root == "":
         return None
-    if root is None:
+    try:
+        if root is not None:
+            os.makedirs(root, exist_ok=True)
+            return root
         if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
             return None
-        root = "/dev/shm/bpspark_scratch"
-    try:
-        os.makedirs(root, exist_ok=True)
+        root = f"/dev/shm/bpspark_scratch_{os.getuid()}"
+        os.makedirs(root, mode=0o700, exist_ok=True)
+        st = os.lstat(root)
     except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
         return None
     return root
 

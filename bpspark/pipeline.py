@@ -15,8 +15,10 @@ as one verdict row per genuinely-new ZIP:
      → INVALID_GENRE; a ZIP with no code is accepted
   6. startBestPubWorkflowInstance (:119, :219-248) → control rows of the accepted ZIPs
 
-``workflows_new``, ``quarantine`` and ``silver_chapters`` are projections of
-that one frame, so each sink plan scans and parses the batch once. The
+The batch is scanned and parsed once, in ``ingest_from_arrivals``: the
+verdict frame is stored there (``localCheckpoint``), and ``workflows_new``,
+``quarantine`` and ``silver_chapters`` are projections of the stored rows,
+so the sinks read the verdicts without scanning or parsing again. The
 ledger anti-joins run BEFORE the parse (the reference's cheap-predicate-
 first stance, §4.1), so already-seen ZIPs are never unzipped. At 100 TB:
 arrivals×ledger joins shuffle on the business key (or broadcast when the
@@ -134,6 +136,13 @@ def ingest_from_arrivals(spark: SparkSession, arrivals: DataFrame, ledgers: Ledg
                 F.concat(F.lit("genre not in dimension: "),
                          F.coalesce("book_genre", F.lit("<missing>"))))),
         )
+        # Stored once, so both sinks and the chapters projection read these
+        # rows instead of each re-running the scan, the gate and the parse.
+        # Taken after parse_zips, so no ZIP bytes are kept; one row per new
+        # ZIP of the batch, so its size is bounded by one drop, not by the
+        # corpus. A lost block fails the batch: foreachBatch is at-least-
+        # once and both sinks anti-join on their key, so the retry is correct.
+        .localCheckpoint()
     )
     accepted = verdicts.filter(F.col("verdict").isNull())
 
@@ -219,32 +228,21 @@ def _fixture_ledgers(spark: SparkSession) -> tuple[str, Ledgers]:
     return d, Ledgers.load(spark, d)
 
 
-# One fixture ingest per SparkSession: five pipeline_* ops read the same
-# R1→R14 batch over the same fixture drop folder, and the idempotent
-# rerun's anti-join would otherwise re-trigger the whole ZIP parse on
-# every downstream action. The outputs are fixture-sized (tens of rows),
-# so caching them is free; correctness is unchanged (each op still
-# returns its own projection of the one batch).
+# One fixture ingest per SparkSession: the pipeline_* ops read the same
+# R1→R14 batch over the same fixture drop folder, so it is ingested (and
+# its verdicts stored) once and each op returns its own projection of it.
 _FIXTURE_INGEST: dict[int, tuple[str, Ledgers, IngestResult]] = {}
 
 
 def _fixture_ingest(spark: SparkSession) -> tuple[str, Ledgers, IngestResult]:
     key = id(spark)
     if key not in _FIXTURE_INGEST:
-        # keep only the live session's entry: cached DataFrames pin their
+        # keep only the live session's entry: stored DataFrames pin their
         # (possibly stopped) SparkSession's JVM state, so entries from
         # earlier sessions in the same interpreter must not accumulate
         _FIXTURE_INGEST.clear()
         d, ledgers = _fixture_ledgers(spark)
-        res = ingest_batch(spark, f"{d}/drop", ledgers)
-        res = IngestResult(
-            arrivals=res.arrivals,
-            new_arrivals=res.new_arrivals,
-            workflows_new=res.workflows_new.cache(),
-            silver_chapters=res.silver_chapters.cache(),
-            quarantine=res.quarantine.cache(),
-        )
-        _FIXTURE_INGEST[key] = (d, ledgers, res)
+        _FIXTURE_INGEST[key] = (d, ledgers, ingest_batch(spark, f"{d}/drop", ledgers))
     return _FIXTURE_INGEST[key]
 
 

@@ -59,3 +59,30 @@ def test_queries_leave_process_tempdir_unchanged(entry_run):
     SparkSession must not repoint ``tempfile.tempdir``: only
     session.build() opts a process into the engine's fast scratch."""
     assert "TEMPDIR_UNCHANGED" in entry_run.stdout, entry_run.stdout[-2000:]
+
+
+@pytest.mark.skipif(not os.access("/dev/shm", os.W_OK), reason="no writable /dev/shm")
+def test_default_scratch_root_is_per_user_and_owner_checked(monkeypatch, tmp_path):
+    """The default scratch root is the caller's own 0700 directory; one
+    owned by another user (here: the real uid is not the one the process
+    reports) is refused, while an explicit BPSPARK_SCRATCH_DIR is used
+    as given."""
+    from bpspark.config import fast_scratch_dir
+
+    monkeypatch.delenv("BPSPARK_SCRATCH_DIR", raising=False)
+    uid = os.getuid()
+    own = fast_scratch_dir()
+    assert own == f"/dev/shm/bpspark_scratch_{uid}"
+    assert os.stat(own).st_uid == uid
+
+    other = uid + 4242
+    squatted = f"/dev/shm/bpspark_scratch_{other}"
+    monkeypatch.setattr(os, "getuid", lambda: other)
+    try:
+        assert fast_scratch_dir() is None  # exists, but owned by the real uid
+        assert os.stat(squatted).st_mode & 0o077 == 0
+    finally:
+        os.rmdir(squatted)
+
+    monkeypatch.setenv("BPSPARK_SCRATCH_DIR", str(tmp_path / "explicit"))
+    assert fast_scratch_dir() == str(tmp_path / "explicit")
